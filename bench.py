@@ -1,5 +1,6 @@
 """Headline benchmark: blocking + vectorized pairwise scoring + top-k +
-full ER pipeline, timed at $SPARK_GRAFT_SF_DIR on local[$SPARK_GRAFT_CPUS].
+full ER pipeline, timed at $SPARK_GRAFT_SF_DIR on local[$SPARK_GRAFT_CPUS]
+(default: the cores in the process's affinity mask).
 
 Prints ONE JSON line:
     {"metric": "...", "value": <total sec>, "unit": "sec",
@@ -29,7 +30,7 @@ from rapidfuzz_spark.pipeline import run as P
 from rapidfuzz_spark.pipeline import synth
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0))))
 
 
 def docs(spark):

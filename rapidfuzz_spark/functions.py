@@ -692,7 +692,7 @@ def token_set_ratio(
     each constructed string first (the driver query uses it so the
     SQL oracle's recursive-CTE LCS replay stays bounded; capping
     preserves the t0-is-a-prefix property the oracle's closed forms
-    rely on)."""
+    rely on). NULL on either side gives NULL."""
     a1, a2 = _token_set(s1), _token_set(s2)
     inter = F.array_sort(F.array_intersect(a1, a2))
     d1 = F.array_sort(F.array_except(a1, a2))
@@ -704,4 +704,9 @@ def token_set_ratio(
         t0 = F.substring(t0, 1, cap)
         c1 = F.substring(c1, 1, cap)
         c2 = F.substring(c2, 1, cap)
-    return F.greatest(ratio(t0, c1), ratio(t0, c2), ratio(c1, c2))
+    # a NULL side has a NULL token array; without the guard the set
+    # algebra degrades to ratio("", "") = 1.0, a perfect match
+    return F.when(
+        a1.isNotNull() & a2.isNotNull(),
+        F.greatest(ratio(t0, c1), ratio(t0, c2), ratio(c1, c2)),
+    )

@@ -1,11 +1,20 @@
 """Blocking-key generation with explicit hot-key skew handling.
 
-Produces (block_key, doc_id, norm_text) pairs from multiple passes:
-- token keys: explode distinct tokens of the normalized text
-- prefix keys: first N chars of the token-sorted canonical key
+Produces (block_key, doc_id) rows from several passes:
+- token keys ("t:"): distinct tokens of the normalized text
+- token affix keys ("tp:"/"ts:"): per-token 4-char prefix and suffix
+- prefix keys ("p:"): first N chars of the token-sorted canonical key
+- deletion-signature keys ("e:"): the del<=1 neighborhood of each
+  discriminative token
+- media-ref keys ("mr:"): media objects embedded in non-text spans
+- phonetic keys ("sx:"): Soundex code of the first word
 - sorted-neighborhood: rank docs by sort key inside bounded range buckets
   and pair each doc with its w successors (Window over the bucket — bucket
   sizes are bounded by the range partitioner, so no single-partition sort).
+
+``blocking_keys`` fuses the token, prefix and affix passes into one
+projection; ``pipeline.run.pipeline_blocking_keys`` is the shipped recipe
+that combines it with the other passes.
 
 Skew: a census (groupBy(block_key).count()) finds hot keys; keys above
 ``hot_cap`` get a replication factor G = ceil(count / hot_cap). The pair
@@ -31,7 +40,6 @@ PREFIX_N = 4
 AFFIX_N = 4
 AFFIX_MIN_LEN = 5
 SN_BUCKET_CHARS = 2
-PAIR_MAX_TOKENS = 8
 DELSIG_MIN_LEN = 5
 DELSIG_MAX_LEN = 16
 
@@ -77,42 +85,6 @@ def token_affix_keys(
         "doc_id",
     )
     return pfx.unionByName(sfx).dropDuplicates(["block_key", "doc_id"])
-
-
-def token_pair_keys(
-    docs: DataFrame, min_len: int = TOKEN_MIN_LEN, max_tokens: int = PAIR_MAX_TOKENS
-) -> DataFrame:
-    """Conjunctive (token-pair) keys: one key ``d:tok1|tok2`` per unordered
-    pair of distinct tokens (sorted order, first ``max_tokens`` tokens).
-
-    The recall carrier for records whose DISCRIMINATIVE token is corrupted
-    independently on both sides (two edits apart — every single-token and
-    affix key breaks) while the shared tokens are individually
-    stopword-grade: a pair of common tokens ("david"+"jones") is orders of
-    magnitude rarer than either alone, so it passes under ``drop_cap``
-    where the single-token keys are census-dropped. Key count is
-    O(max_tokens^2) per doc — bounded, and hot pairs are themselves
-    salted/dropped by the census like any other key."""
-    toks = F.slice(
-        F.array_sort(
-            F.filter(
-                F.array_distinct(F.split("norm_text", r"\s+")),
-                lambda t: F.length(t) >= min_len,
-            )
-        ),
-        1,
-        max_tokens,
-    )
-    pairs = F.flatten(
-        F.transform(
-            toks,
-            lambda x, i: F.transform(
-                F.slice(toks, i + 2, F.size(toks)),
-                lambda y: F.concat(F.lit("d:"), x, F.lit("|"), y),
-            ),
-        )
-    )
-    return docs.select(F.explode(pairs).alias("block_key"), "doc_id")
 
 
 def _deletion_sig_arr(tok):
@@ -312,44 +284,28 @@ def sorted_neighborhood_pairs(docs: DataFrame, window: int = 3) -> DataFrame:
 
 def blocking_keys(
     docs: DataFrame,
-    use_tokens: bool = True,
-    use_prefix: bool = True,
-    use_token_affixes: bool = True,
-    use_sorted_neighborhood: bool = True,
-    use_token_pairs: bool = False,
-    use_deletion_sigs: bool = False,
-    sn_window: int = 3,
+    use_prefix: bool = False,
     carry_len_from: str | None = None,
 ) -> DataFrame:
-    """All key passes fused into ONE narrow projection + explode: the
-    per-doc key set is built with higher-order functions (transform /
-    filter over the token array) and deduped per doc with array_distinct
-    — key namespaces (t:/p:/tp:/ts:) are disjoint, so per-doc distinct
-    equals the old per-pass global dedup. vs the previous
-    one-DataFrame-per-pass union this removes the affix-key
-    dropDuplicates SHUFFLE, two redundant explode scans of the doc
-    cache, and the union's partition concatenation (the 7x-partition
-    cache problem candidate_pairs coalesces away). Per-pass outputs are
-    still exposed above (token_keys & co.) and CI asserts set equality
-    with their union."""
-    if not (
-        use_tokens
-        or use_prefix
-        or use_token_affixes
-        or use_sorted_neighborhood
-        or use_token_pairs
-        or use_deletion_sigs
-    ):
-        raise ValueError("no blocking passes enabled")
+    """The token, prefix and affix passes fused into ONE narrow
+    projection + explode: the per-doc key set is built with higher-order
+    functions (transform / filter over the token array) and deduped per
+    doc with array_distinct — key namespaces (t:/p:/tp:/ts:) are
+    disjoint, so per-doc distinct equals a per-pass global dedup. vs one
+    DataFrame per pass unioned, this saves the affix-key dropDuplicates
+    SHUFFLE, two explode scans of the doc cache, and the union's
+    partition concatenation. The per-pass functions above (token_keys &
+    co.) are the references CI checks this projection against.
+
+    ``use_prefix`` adds the doc-prefix family; off by default, like
+    ``PipelineConfig.doc_prefix_blocking``."""
     toks = F.array_distinct(F.split("norm_text", r"\s+"))
-    arrs = []
-    if use_tokens:
-        arrs.append(
-            F.transform(
-                F.filter(toks, lambda t: F.length(t) >= TOKEN_MIN_LEN),
-                lambda t: F.concat(F.lit("t:"), t),
-            )
+    arrs = [
+        F.transform(
+            F.filter(toks, lambda t: F.length(t) >= TOKEN_MIN_LEN),
+            lambda t: F.concat(F.lit("t:"), t),
         )
+    ]
     if use_prefix:
         squashed = F.regexp_replace("canon_text", r"\s", "")
         arrs.append(
@@ -358,72 +314,26 @@ def blocking_keys(
                 F.array(F.concat(F.lit("p:"), F.substring(squashed, 1, PREFIX_N))),
             ).otherwise(F.array().cast("array<string>"))
         )
-    if use_token_affixes:
-        longs = F.filter(toks, lambda t: F.length(t) >= AFFIX_MIN_LEN)
-        arrs.append(
-            F.transform(
-                longs, lambda t: F.concat(F.lit("tp:"), F.substring(t, 1, AFFIX_N))
-            )
+    longs = F.filter(toks, lambda t: F.length(t) >= AFFIX_MIN_LEN)
+    arrs.append(
+        F.transform(
+            longs, lambda t: F.concat(F.lit("tp:"), F.substring(t, 1, AFFIX_N))
         )
-        arrs.append(
-            F.transform(
-                longs,
-                lambda t: F.concat(F.lit("ts:"), F.substring(t, -AFFIX_N, AFFIX_N)),
-            )
+    )
+    arrs.append(
+        F.transform(
+            longs,
+            lambda t: F.concat(F.lit("ts:"), F.substring(t, -AFFIX_N, AFFIX_N)),
         )
-    if use_deletion_sigs:
-        # del<=1 signature neighborhood per discriminative token (see
-        # token_deletion_keys for the recall rationale)
-        sig_toks = F.filter(
-            toks, lambda t: F.length(t).between(DELSIG_MIN_LEN, DELSIG_MAX_LEN)
-        )
-        arrs.append(F.flatten(F.transform(sig_toks, _deletion_sig_arr)))
-    if use_token_pairs:
-        # conjunctive pairs over the sorted distinct tokens (see
-        # token_pair_keys for the recall rationale); sorted order makes
-        # the unordered pair canonical without least/greatest
-        sorted_toks = F.slice(
-            F.array_sort(F.filter(toks, lambda t: F.length(t) >= TOKEN_MIN_LEN)),
-            1,
-            PAIR_MAX_TOKENS,
-        )
-        arrs.append(
-            F.flatten(
-                F.transform(
-                    sorted_toks,
-                    lambda x, i: F.transform(
-                        F.slice(sorted_toks, i + 2, F.size(sorted_toks)),
-                        lambda y: F.concat(F.lit("d:"), x, F.lit("|"), y),
-                    ),
-                )
-            )
-        )
-    out = None
-    if arrs:
-        # distinct even for a single arm: the deletion-sig generator emits
-        # in-array duplicates (doubled letters), and duplicate (key, doc)
-        # rows would inflate the hot-key census counts
-        key_arr = (
-            F.array_distinct(F.concat(*arrs))
-            if len(arrs) > 1
-            else F.array_distinct(arrs[0])
-        )
-        cols = [F.explode(key_arr).alias("block_key"), F.col("doc_id")]
-        if carry_len_from is not None:
-            # ride the scoring-text length through the key explode (one
-            # int per row) so candidate_pairs can apply the length-
-            # difference prune BEFORE the pair-dedup shuffle
-            cols.append(F.length(carry_len_from).alias("tlen"))
-        out = docs.select(*cols)
-    if use_sorted_neighborhood:
-        sn = sorted_neighborhood_keys(docs, window=sn_window)
-        if carry_len_from is not None:
-            sn = sn.join(
-                docs.select("doc_id", F.length(carry_len_from).alias("tlen")),
-                "doc_id",
-            ).select("block_key", "doc_id", "tlen")
-        out = sn if out is None else out.unionByName(sn)
-    return out
+    )
+    key_arr = F.array_distinct(F.concat(*arrs))
+    cols = [F.explode(key_arr).alias("block_key"), F.col("doc_id")]
+    if carry_len_from is not None:
+        # ride the scoring-text length through the key explode (one
+        # int per row) so candidate_pairs can apply the length-
+        # difference prune BEFORE the pair-dedup shuffle
+        cols.append(F.length(carry_len_from).alias("tlen"))
+    return docs.select(*cols)
 
 
 def hot_key_census(keys: DataFrame, hot_cap: int, drop_cap: int) -> DataFrame:

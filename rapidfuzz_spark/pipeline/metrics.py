@@ -1,4 +1,4 @@
-"""Evaluation + metrics/lineage tables.
+"""Evaluation: pairwise and clustering quality metrics.
 
 - pairwise_f1_vs_oracle: the BASELINE gate — on the SAME candidate pairs
   (same blocking key), compare the pipeline's match decisions against the
@@ -12,7 +12,7 @@ from __future__ import annotations
 
 import pandas as pd
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import BooleanType
 
@@ -83,18 +83,6 @@ def cluster_pairwise_f1(predicted: DataFrame, truth: DataFrame) -> dict:
     f1 = 2 * prec * rec / (prec + rec) if prec + rec else 0.0
     return {"tp": tp, "fp": fp, "fn": fn, "precision": prec, "recall": rec, "f1": f1}
 
-
-def write_run_metrics(
-    spark: SparkSession, out_dir: str, run_id: str, rows: dict
-) -> None:
-    """Lineage/metrics table: one row per run stage-metric."""
-    import os
-
-    df = spark.createDataFrame(
-        [(run_id, k, float(v)) for k, v in rows.items() if isinstance(v, (int, float))],
-        "run_id string, metric string, value double",
-    )
-    df.write.mode("append").parquet(os.path.join(out_dir, "metrics"))
 
 def bcubed(assign: DataFrame) -> DataFrame:
     """B-cubed extrinsic clustering evaluation (Bagga & Baldwin 1998;

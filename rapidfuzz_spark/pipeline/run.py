@@ -6,8 +6,9 @@
 Stages (SURVEY.md §3.4): read docs -> match-text projection -> blocking
 keys -> salted self-join -> candidate pairs -> Arrow-batched UDF scoring
 (with per-bucket checkpoint ledger) -> threshold edges -> large-star/
-small-star clustering -> entity assignment -> entities + metrics + lineage
-parquet. Span sequences pass through untouched.
+small-star clustering -> entity assignment. Writes the ``entities``
+parquet and, when checkpointing, the ``edges`` buckets, their ``ledger``
+and the surrogate ``id_map``. Span sequences pass through untouched.
 """
 
 from __future__ import annotations
@@ -104,18 +105,15 @@ def pipeline_blocking_keys(
 ) -> DataFrame:
     """The SHIPPED blocking-key recipe for a derived-text doc frame (all
     passes except sorted-neighborhood, which is generated directly as
-    pairs). Shared by run_pipeline and the evaluation tools so a default
-    change cannot silently drift between them.
+    pairs). Shared by the batch and incremental paths so a default change
+    cannot silently drift between them.
 
     ``carry_len``: ride the scoring-text length (canon_text — same value
     attach_texts exposes as len_1/len_2) on every key row so
     candidate_pairs can length-prune pairs before the dedup shuffle."""
     src = "canon_text" if carry_len else None
     keys = blocking.blocking_keys(
-        docs_t,
-        use_prefix=conf.doc_prefix_blocking,
-        use_sorted_neighborhood=False,
-        carry_len_from=src,
+        docs_t, use_prefix=conf.doc_prefix_blocking, carry_len_from=src
     )
     if conf.deletion_sig_blocking:
         # standalone (not fused) so sig generation can be DF-prefiltered:
@@ -131,6 +129,34 @@ def pipeline_blocking_keys(
     if conf.media_ref_blocking and "spans" in docs_t.columns:
         keys = keys.unionByName(blocking.media_ref_keys(docs_t, carry_len_from=src))
     return keys
+
+
+def pipeline_candidate_pairs(
+    docs_t: DataFrame,
+    conf: PipelineConfig,
+    len_frac: Optional[float] = None,
+    cache_out: Optional[list] = None,
+) -> DataFrame:
+    """The SHIPPED candidate-pair recipe: ``pipeline_blocking_keys``
+    through the salted, census-capped self-join, plus the
+    sorted-neighborhood pairs, deduped across passes. SN pairs are
+    produced directly (size-2 blocks never need the census/salted-join
+    machinery).
+
+    ``len_frac``: length-difference prune at the key join (see
+    ``blocking.candidate_pairs``); the keys carry the text length only
+    when it is set. ``cache_out`` receives the persisted key cache for the
+    caller to unpersist."""
+    keys = pipeline_blocking_keys(docs_t, conf, carry_len=len_frac is not None)
+    sn = blocking.sorted_neighborhood_pairs(docs_t, window=conf.sn_window)
+    return blocking.candidate_pairs(
+        keys,
+        hot_cap=conf.hot_cap,
+        drop_cap=conf.drop_cap,
+        extra_pairs=sn,
+        cache_out=cache_out,
+        len_frac=len_frac,
+    )
 
 
 def _parquet_has_rows(spark: SparkSession, path: str) -> bool:
@@ -277,10 +303,6 @@ def run_pipeline(
     from pyspark.storagelevel import StorageLevel
 
     docs_t = docs_t.persist(StorageLevel.MEMORY_AND_DISK)
-    # sorted-neighborhood pairs are produced directly (size-2 blocks never
-    # need the census/salted-join machinery); the remaining passes go
-    # through the salted self-join, with cross-pass dedup inside
-    # candidate_pairs
     # metrics with the indel-family length prefilter (scoring.score_pairs)
     # get the SAME prune applied at the blocking join, before the pair
     # dedup shuffle and both attach joins — the pairs it removes are
@@ -288,16 +310,9 @@ def run_pipeline(
     # are unchanged (locked by test_len_prune_matches_score_prefilter)
     prunable = conf.metric in scoring.PRUNABLE_METRICS
     len_frac = (1.0 - conf.threshold) if prunable else None
-    keys = pipeline_blocking_keys(docs_t, conf, carry_len=prunable)
-    sn = blocking.sorted_neighborhood_pairs(docs_t, window=conf.sn_window)
     caches: list = []
-    pairs = blocking.candidate_pairs(
-        keys,
-        hot_cap=conf.hot_cap,
-        drop_cap=conf.drop_cap,
-        extra_pairs=sn,
-        cache_out=caches,
-        len_frac=len_frac,
+    pairs = pipeline_candidate_pairs(
+        docs_t, conf, len_frac=len_frac, cache_out=caches
     )
     # docs_t is already persisted; this aggregate is the same cache scan
     # the first blocking job performs, so the extra action is cheap. The

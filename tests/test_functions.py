@@ -314,6 +314,35 @@ def test_token_set_ratio_randomized_vs_reference(spark):
         assert out[pid] == round(_tsr_reference(t1, t2), 6), (pid, t1, t2)
 
 
+def test_token_set_ratio_and_partial_ratio_null_sides(spark):
+    """A NULL side scores NULL, never a perfect match, and no row is
+    dropped (token_set_ratio returned 1.0 for both of the NULL rows)."""
+    from rapidfuzz_spark.textops import softtfidf
+
+    rows = [
+        (0, "john smith", None),
+        (1, None, "john smith"),
+        (2, None, None),
+        (3, "john smith", "smith john"),
+    ]
+    df = spark.createDataFrame(
+        rows, "id_1 int, t1 string, t2 string"
+    ).withColumn("id_2", F.col("id_1"))
+    tsr = {
+        r.id_1: r.v
+        for r in df.select(
+            "id_1", RF.token_set_ratio("t1", "t2").alias("v")
+        ).collect()
+    }
+    assert tsr == {0: None, 1: None, 2: None, 3: 1.0}
+    pr = {
+        r.id_1: r.partial_ratio
+        for r in softtfidf.partial_ratio_pairs(df).collect()
+    }
+    full = round(_pr_reference("john smith", "smith john"), 6)
+    assert pr == {0: None, 1: None, 2: None, 3: full}
+
+
 def _pr_reference(t1: str, t2: str) -> float:
     import rapidfuzz_spark as rf
 

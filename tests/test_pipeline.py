@@ -16,6 +16,7 @@ from rapidfuzz_spark.pipeline import (
     scoring,
     synth,
 )
+from rapidfuzz_spark.pipeline.run import pipeline_candidate_pairs
 
 
 @pytest.fixture(scope="module")
@@ -112,11 +113,11 @@ def test_load_documents_hive_partitioned_bare_path(
 
 
 def test_blocking_recall(spark, corpus):
-    """Every true duplicate pair must share >= 1 blocking key (recall gate)."""
+    """The shipped candidate-pair recipe must find the true duplicate pairs
+    (recall gate)."""
     docs_t = ingest.with_match_text(corpus)
     _, labels = synth.truth_tables(corpus)
-    keys = blocking.blocking_keys(docs_t)
-    pairs = blocking.candidate_pairs(keys)
+    pairs = pipeline_candidate_pairs(docs_t, PipelineConfig())
     found = labels.join(pairs, ["doc_id_1", "doc_id_2"], "left_semi").count()
     total = labels.count()
     assert total > 200
@@ -124,11 +125,11 @@ def test_blocking_recall(spark, corpus):
 
 
 def test_fused_blocking_keys_match_per_pass_union(spark, corpus):
-    """blocking_keys builds all passes in one narrow projection+explode;
+    """blocking_keys builds all its passes in one narrow projection+explode;
     its output must equal the union of the per-pass generators exactly
     (same multiset — all passes are per-doc distinct)."""
     docs_t = ingest.with_match_text(corpus)
-    fused = blocking.blocking_keys(docs_t, use_sorted_neighborhood=False)
+    fused = blocking.blocking_keys(docs_t, use_prefix=True)
     union = (
         blocking.token_keys(docs_t)
         .unionByName(blocking.prefix_keys(docs_t))
@@ -136,21 +137,6 @@ def test_fused_blocking_keys_match_per_pass_union(spark, corpus):
     )
     assert fused.exceptAll(union).isEmpty()
     assert union.exceptAll(fused).isEmpty()
-    # optional passes fuse the same way: per-pass generators == fused slice
-    fused_all = blocking.blocking_keys(
-        docs_t,
-        use_sorted_neighborhood=False,
-        use_token_pairs=True,
-        use_deletion_sigs=True,
-    )
-    for prefix, gen in (
-        ("d:", blocking.token_pair_keys),
-        ("e:", blocking.token_deletion_keys),
-    ):
-        sliced = fused_all.where(F.col("block_key").startswith(prefix))
-        alone = gen(docs_t)
-        assert sliced.exceptAll(alone).isEmpty()
-        assert alone.exceptAll(sliced).isEmpty()
 
 
 def test_sorted_neighborhood_pairs_match_keyed_path(spark, corpus):
@@ -229,7 +215,7 @@ def test_deletion_sig_df_cap_monotone(spark):
     ]
     docs = spark.createDataFrame(rows, "doc_id string, norm_text string")
     docs = docs.withColumn("canon_text", F.col("norm_text"))
-    base = blocking.blocking_keys(docs, use_sorted_neighborhood=False)
+    base = blocking.blocking_keys(docs)
     full = base.unionByName(blocking.token_deletion_keys(docs))
     filt = base.unionByName(blocking.token_deletion_keys(docs, df_cap=5))
     # the cap must actually remove generation work...
@@ -335,8 +321,7 @@ def test_pairwise_f1_vs_oracle(spark, corpus):
     """BASELINE gate: decisions on candidate pairs vs the scalar
     reference-parity oracle, F1 >= 0.99 (it is 1.0 by construction)."""
     docs_t = ingest.with_match_text(corpus)
-    keys = blocking.blocking_keys(docs_t)
-    pairs = blocking.candidate_pairs(keys)
+    pairs = pipeline_candidate_pairs(docs_t, PipelineConfig())
     pairs_t = scoring.attach_texts(pairs, docs_t)
     scored = pairs_t.withColumn(
         "score",

@@ -1494,3 +1494,19 @@ def test_set_join_sim_values(spark):
     assert len(r) == 1 and r[0].sim == 0.75
     r = dedup.prefix_filter_set_join(docs, "text", "overlap", 3, 1).collect()
     assert len(r) == 1 and r[0].sim == 0.75
+
+
+@pytest.mark.parametrize(
+    "measure,num,den",
+    [
+        ("cosine", 11, 10),  # t > 1
+        ("dice", 2, 1),  # 2*den - num = 0: the prefix divisor vanishes
+        ("overlap", 0, 1),  # an empty required intersection
+    ],
+)
+def test_set_join_rejects_out_of_range_threshold(spark, measure, num, den):
+    from rapidfuzz_spark.textops import dedup
+
+    docs = spark.createDataFrame([(1, "a b c")], "doc_id int, text string")
+    with pytest.raises(ValueError, match="threshold_num"):
+        dedup.prefix_filter_set_join(docs, "text", measure, num, den)

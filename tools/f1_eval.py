@@ -38,7 +38,7 @@ def main() -> None:
         .getOrCreate()
     )
     spark.sparkContext.setLogLevel("ERROR")
-    from rapidfuzz_spark.pipeline import blocking, cluster, ingest, metrics, scoring, synth
+    from rapidfuzz_spark.pipeline import cluster, ingest, metrics, scoring, synth
     from rapidfuzz_spark.textops import softtfidf as ST
 
     corpus = synth.synth_documents(spark, n_entities=n_entities, seed=42)
@@ -54,7 +54,7 @@ def main() -> None:
     # THE shipped recipe, via the shared helper — hand-copying it here
     # drifted once already (the media-ref pass was missing while the
     # header claimed 'same recipe as run_pipeline')
-    from rapidfuzz_spark.pipeline.run import PipelineConfig, pipeline_blocking_keys
+    from rapidfuzz_spark.pipeline.run import PipelineConfig, pipeline_candidate_pairs
 
     conf = PipelineConfig(
         drop_cap=drop_cap,
@@ -63,13 +63,8 @@ def main() -> None:
         # F1_PREFIX=1 is the explicit audit override
         doc_prefix_blocking=os.environ.get("F1_PREFIX", "0") == "1",
     )
-    keys = pipeline_blocking_keys(docs_t, conf)
-    sn = blocking.sorted_neighborhood_pairs(docs_t, window=3)
     key_caches: list = []
-    cand = blocking.candidate_pairs(
-        keys, hot_cap=200, drop_cap=drop_cap, extra_pairs=sn,
-        cache_out=key_caches,
-    )
+    cand = pipeline_candidate_pairs(docs_t, conf, cache_out=key_caches)
     pairs_t = scoring.attach_texts(cand, docs_t).repartition(cpus * 4)
     t0 = time.time()
     scored = pairs_t.select(

@@ -61,7 +61,7 @@ def main() -> None:
     conf = PipelineConfig(drop_cap=drop_cap, doc_prefix_blocking=True)
     keys = pipeline_blocking_keys(docs_t, conf).withColumn(
         "fam",
-        F.when(F.col("block_key").rlike("^(e|d):"), "delsig").otherwise(
+        F.when(F.col("block_key").rlike("^e:"), "delsig").otherwise(
             F.regexp_extract("block_key", r"^([a-z]+):", 1)
         ),
     )

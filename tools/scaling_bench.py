@@ -42,9 +42,8 @@ def main() -> None:
     # the faithful sandbox proxy for "N- vs 4N-executor clusters": each
     # executor owns its heap, GC, Arrow channels, and Python workers.
     # `scaling_bench.py 1` vs `scaling_bench.py 4` is the N vs 4N pair.
-    argv = [a for a in sys.argv[1:] if a not in ("--pipeline", "--phases")]
+    argv = [a for a in sys.argv[1:] if a != "--pipeline"]
     pipeline_mode = "--pipeline" in sys.argv[1:]
-    phases_mode = "--phases" in sys.argv[1:]
     n_exec = int(argv[0]) if argv else 4
     cores = int(os.environ.get("SCALING_CORES_PER_EXEC", "4"))
     mem_mb = int(os.environ.get("SCALING_EXEC_MB", "8192"))
@@ -142,110 +141,14 @@ def main() -> None:
         spark.stop()
         return
 
-    if phases_mode:
-        # --phases: per-phase wall decomposition of the full pipeline at
-        # this parallelism (diagnostic for the serial-chain Amdahl term;
-        # phase boundaries are forced with localCheckpoint, so the SUM is
-        # slightly above the fused --pipeline wall — compare phases across
-        # parallelism levels, not against the fused number)
-        from pyspark.sql import Window  # noqa: F401
-
-        import rapidfuzz_spark.pipeline.run as P
-        from rapidfuzz_spark.pipeline import cluster
-
-        n_entities = int(os.environ.get("SCALING_PIPE_ENTITIES", "30000"))
-        shipped = os.environ.get("SCALING_SHIPPED", "1") == "1"
-        conf = P.PipelineConfig(
-            metric="ratio", threshold=0.85, drop_cap=500, checkpoint=False,
-            deletion_sig_blocking=shipped, media_ref_blocking=shipped,
-            doc_prefix_blocking=not shipped,
-        )
-        corpus = (
-            synth.synth_documents(spark, n_entities=n_entities, seed=42)
-            .drop("entity_id")
-            .repartition(PARTS)
-            .localCheckpoint(eager=True)
-        )
-        corpus.count()
-        # warm-up pass
-        ingest.with_match_text(corpus).select(
-            RF.ratio("match_text", "match_text").alias("s")
-        ).agg(F.count("s")).collect()
-        t: dict[str, float] = {}
-
-        def lap(name, fn):
-            t0 = time.perf_counter()
-            r = fn()
-            t[name] = round(time.perf_counter() - t0, 2)
-            return r
-
-        docs_t = lap(
-            "project+persist",
-            lambda: ingest.with_match_text(corpus)
-            .persist()
-            .localCheckpoint(eager=True),
-        )
-        keys = lap(
-            "blocking_keys",
-            lambda: P.pipeline_blocking_keys(
-                docs_t, conf, carry_len=True
-            ).localCheckpoint(eager=True),
-        )
-        census = lap(
-            "census",
-            lambda: blocking.hot_key_census(
-                keys.select("block_key", "doc_id"), conf.hot_cap, conf.drop_cap
-            ).localCheckpoint(eager=True),
-        )
-        sn = blocking.sorted_neighborhood_pairs(docs_t, window=conf.sn_window)
-        pairs = lap(
-            "pairs+dedup",
-            lambda: blocking.candidate_pairs(
-                keys, hot_cap=conf.hot_cap, drop_cap=conf.drop_cap,
-                extra_pairs=sn, len_frac=1.0 - conf.threshold,
-            ).localCheckpoint(eager=True),
-        )
-        n_pairs = pairs.count()
-        pairs_t = lap(
-            "attach_texts",
-            lambda: scoring.attach_texts(
-                pairs, docs_t, broadcast_docs=True
-            ).localCheckpoint(eager=True),
-        )
-        edges = lap(
-            "score",
-            lambda: scoring.score_pairs(
-                pairs_t, metric=conf.metric, threshold=conf.threshold
-            ).localCheckpoint(eager=True),
-        )
-        comps = lap("cc", lambda: cluster.connected_components(edges))
-        lap(
-            "assign+count",
-            lambda: cluster.assign_entities(docs_t, comps)
-            .select(F.countDistinct("entity_id"))
-            .collect(),
-        )
-        print(
-            json.dumps(
-                {
-                    "mode": "phases",
-                    "executors": n_exec,
-                    "cores_per_executor": cores,
-                    "n_pairs": n_pairs,
-                    "phases": t,
-                    "total": round(sum(t.values()), 2),
-                }
-            )
-        )
-        spark.stop()
-        return
-
     n_entities = int(os.environ.get("SCALING_ENTITIES", "40000"))
     corpus = synth.synth_documents(spark, n_entities=n_entities, seed=42)
     docs_t = ingest.with_match_text(corpus.drop("entity_id")).localCheckpoint(
         eager=True
     )
-    keys = blocking.blocking_keys(docs_t, use_sorted_neighborhood=False)
+    # the round-1 recipe (doc-prefix family on, no deletion-sig or
+    # media-ref keys), pinned so the N-vs-4N trial series stays comparable
+    keys = blocking.blocking_keys(docs_t, use_prefix=True)
     sn = blocking.sorted_neighborhood_pairs(docs_t, window=3)
     key_caches: list = []
     cand = blocking.candidate_pairs(
