@@ -1,6 +1,7 @@
 """Headline benchmark: blocking + vectorized pairwise scoring + top-k +
 full ER pipeline, timed at $SPARK_GRAFT_SF_DIR on local[$SPARK_GRAFT_CPUS]
-(default: the cores in the process's affinity mask).
+(default: the cores in the process's affinity mask), with a JVM heap of
+$SPARK_DRIVER_MEM (default: 25% of MemTotal).
 
 Prints ONE JSON line:
     {"metric": "...", "value": <total sec>, "unit": "sec",
@@ -31,6 +32,20 @@ from rapidfuzz_spark.pipeline import synth
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0))))
+
+
+def driver_memory() -> str:
+    """SPARK_DRIVER_MEM, else 25% of MemTotal (at least 1 GiB): local mode
+    runs the executors inside the driver's JVM heap."""
+    if "SPARK_DRIVER_MEM" in os.environ:
+        return os.environ["SPARK_DRIVER_MEM"]
+    mem_total_kb = 0
+    with open("/proc/meminfo") as fh:
+        for line in fh:
+            if line.startswith("MemTotal:"):
+                mem_total_kb = int(line.split()[1])
+                break
+    return f"{max(1024, mem_total_kb // 1024 // 4)}m"
 
 
 def docs(spark):
@@ -155,7 +170,7 @@ def main() -> None:
         .config("spark.sql.shuffle.partitions", str(CPUS))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "16g"))
+        .config("spark.driver.memory", driver_memory())
         .config("spark.ui.enabled", "false")
         .getOrCreate()
     )

@@ -9,6 +9,13 @@ Readme.md:100-106), applied *within* an Arrow batch of a pandas UDF:
   alphabets are densely remapped per batch): the char loop runs over text positions, each step processing
   every still-active pair with uint64 SIMD-ish ops. Pairs are sorted by
   text length so the active set is a shrinking prefix (no wasted lanes).
+- pairs whose pattern spans W <= _BLOCK_MAX_WORDS words are grouped by W
+  and scored by the **blockwise** kernels, which schedule the pattern
+  words on anti-diagonals: at step s word w takes text char s - w, with
+  the carry word w-1 produced at step s-1, so one set of array ops on
+  the (pairs, W) state advances every word of every pair. A chunk takes
+  max_t + W - 1 steps (max_t its longest text) instead of max_t * W
+  per-(char, word) steps.
 - remaining pairs take the arbitrary-precision Python-int kernels with a
   per-batch pattern-mask cache keyed by the pattern string (the
   BatchComparator analogue: pattern state is built once per distinct s1).
@@ -19,7 +26,8 @@ call scores the whole Arrow batch.
 
 from __future__ import annotations
 
-from typing import Optional
+import functools
+from typing import NamedTuple
 
 import numpy as np
 
@@ -191,13 +199,62 @@ def _build_pm_block(
     return pm
 
 
-def myers_batch_block(pats: list, texts: list, W: int) -> np.ndarray:
-    """Vectorized-across-pairs blockwise Myers/Hyyrö for patterns of
-    word count W (len in (64*(W-1), 64*W]). Semantics follow the
-    reference's hyrroe2003_block (/root/reference/src/distance/
-    levenshtein.rs:769-1019) minus the Ukkonen band: the hp/hn horizontal
-    carries chain low->high word; per text char the distance moves by the
-    carry out of the pattern's last bit. Any Unicode codepoints."""
+# Cells (pairs x padded text columns) of one step-scheduled kernel call's
+# text matrix; a chunk with a far longer text than the rest runs in row
+# slices instead of padding every row to that text's length.
+_STEP_TEXT_CELLS = 1 << 24
+
+
+def _text_budgeted(kernel):
+    """Run a step-scheduled block kernel on slices of its pairs, longest
+    texts first, so that no call's padded text matrix exceeds
+    _STEP_TEXT_CELLS. Pairs are scored independently, so the split does
+    not change results."""
+
+    @functools.wraps(kernel)
+    def run(pats: list, texts: list, W: int, **kw) -> np.ndarray:
+        n = len(texts)
+        tl = np.fromiter((len(t) for t in texts), dtype=np.int64, count=n)
+        if n <= 1 or n * (int(tl.max()) + 2 * W) <= _STEP_TEXT_CELLS:
+            return kernel(pats, texts, W, **kw)
+        order = np.argsort(-tl, kind="stable")
+        parts = []
+        lo = 0
+        while lo < n:
+            rows = max(1, _STEP_TEXT_CELLS // (int(tl[order[lo]]) + 2 * W))
+            sel = order[lo : lo + rows]
+            parts.append(
+                (sel, kernel([pats[i] for i in sel], [texts[i] for i in sel], W, **kw))
+            )
+            lo += rows
+        out = np.empty(n, dtype=parts[0][1].dtype)
+        for sel, res in parts:
+            out[sel] = res
+        return out
+
+    return run
+
+
+class _StepInputs(NamedTuple):
+    """Inputs of a step-scheduled block kernel, rows sorted by text length
+    (longest first, so the rows still running form a prefix)."""
+
+    order: np.ndarray  # sorted row -> input pair
+    inv: np.ndarray  # input pair -> sorted row
+    pm: np.ndarray  # flat PM table, (row, word, code) row-major
+    base: np.ndarray  # (n, W) offset of each (row, word) PM row in pm
+    text: np.ndarray  # (n, max_t + 2W) padded text codes
+    plens: np.ndarray
+    tlens: np.ndarray
+    pcodes: np.ndarray  # compact pattern codes, input order
+    poffs: np.ndarray  # per sorted row: offset of its pattern in pcodes
+
+
+def _step_inputs(pats: list, texts: list, W: int) -> _StepInputs:
+    """Build the step-scheduled kernels' inputs once per call. The text
+    matrix carries W columns of pad code 0 (the all-zero PM row) on both
+    sides: at step s word w reads char s - w from column s - w + W, so
+    all W words read the reversed column slice [s + 1, s + W + 1)."""
     n = len(pats)
     pcodes, plens, poffs = _encode_codes(pats)
     tcodes, tlens, toffs = _encode_codes(texts)
@@ -205,69 +262,89 @@ def myers_batch_block(pats: list, texts: list, W: int) -> np.ndarray:
     order = np.argsort(-tlens, kind="stable")
     inv = np.empty(n, dtype=np.intp)
     inv[order] = np.arange(n, dtype=np.intp)
-    pm = _build_pm_block(pats, pcodes, plens, poffs, W, sigma)[order]
-    plens_s = plens[order]
-    tlens_s = tlens[order]
-    toffs_s = toffs[:-1][order]
-    last = np.uint64(1) << ((plens_s.astype(np.uint64) - np.uint64(1)) % np.uint64(64))
-    last_w = ((plens_s - 1) >> 6).astype(np.intp)  # per-pair last word index
-    # exact-W groups have every pattern ending in word W-1; the mixed-word
-    # where() path below is only needed for padded groups
-    uniform_last = bool((last_w == W - 1).all())
+    pm = _build_pm_block(pats, pcodes, plens, poffs, W, sigma)[order].ravel()
+    base = np.arange(n * W, dtype=np.intp).reshape(n, W) * sigma
+    tl = tlens[order]
+    max_t = int(tl[0]) if n else 0
+    dt = np.uint8 if sigma <= 256 else np.uint16 if sigma <= 65536 else np.int32
+    text = np.zeros((n, max_t + 2 * W), dtype=dt)
+    cols = np.arange(len(tcodes), dtype=np.intp) - np.repeat(toffs[:-1], tlens) + W
+    text[np.repeat(inv, tlens), cols] = tcodes
+    return _StepInputs(
+        order, inv, pm, base, text, plens[order], tl, pcodes, poffs[:-1][order]
+    )
+
+
+@_text_budgeted
+def myers_batch_block(pats: list, texts: list, W: int) -> np.ndarray:
+    """Vectorized-across-pairs blockwise Myers/Hyyrö for patterns of
+    word count exactly W (len in (64*(W-1), 64*W]; ValueError otherwise).
+    Semantics follow the reference's hyrroe2003_block (its
+    src/distance/levenshtein.rs:769-1019) minus the Ukkonen band: the
+    hp/hn horizontal carries chain low->high word, and per text char the
+    distance moves by the carry out of the pattern's last bit. Any
+    Unicode codepoints.
+
+    Words run on anti-diagonals: at step s word w takes text char s - w
+    with the carries word w-1 produced at step s-1, so one set of array
+    ops on the (pairs, W) state advances every word of every pair. Words
+    before their first char read pad code 0 with zero carries and stay
+    at their initial state; words past the text's end are never read
+    back, and a row leaves the running prefix once its last word is past
+    the end, so the score needs no mask."""
+    inp = _step_inputs(pats, texts, W)
+    n = len(pats)
+    if n and ((inp.plens - 1) >> 6 != W - 1).any():
+        raise ValueError("myers_batch_block: every pattern must span exactly W words")
     one = np.uint64(1)
+    s63 = np.uint64(63)
+    score_bit = ((inp.plens - 1) & 63).astype(np.uint64)
     vp = np.full((n, W), ~np.uint64(0), dtype=np.uint64)
     vn = np.zeros((n, W), dtype=np.uint64)
-    dist = plens_s.astype(np.int64).copy()
-    max_t = int(tlens_s[0]) if n else 0
+    # carries as flat (n*W + 1) buffers: carry into (row, word) sits at
+    # row*W + word, so the carries out of a step, written one slot
+    # further, are the next step's carries in; the slots of word 0 are
+    # then reset to the left DP boundary (+1 per row)
+    hp_c = np.zeros(n * W + 1, dtype=np.uint64)
+    hp_c[: n * W : W] = one
+    hn_c = np.zeros(n * W + 1, dtype=np.uint64)
+    hp_next, hn_next = hp_c.copy(), hn_c.copy()
+    dist = inp.plens.astype(np.int64)
+    tl = inp.tlens
     active = n
-    rows = np.arange(n, dtype=np.intp)
-    for j in range(max_t):
-        while active > 0 and tlens_s[active - 1] <= j:
+    for s in range(int(tl[0]) + W - 1 if n else 0):
+        while active > 0 and tl[active - 1] <= s - W + 1:
             active -= 1
-        a = slice(0, active)
-        cj = tcodes[toffs_s[a] + j]
-        hp_c = np.ones(active, dtype=np.uint64)  # left boundary +1 per row
-        hn_c = np.zeros(active, dtype=np.uint64)
-        for w in range(W):
-            vp_w = vp[a, w]
-            vn_w = vn[a, w]
-            pm_j = pm[rows[:active], w, cj]
-            x = pm_j | hn_c
-            d0 = (((x & vp_w) + vp_w) ^ vp_w) | x | vn_w
-            hp = vn_w | ~(d0 | vp_w)
-            hn = d0 & vp_w
-            # score moves at each pair's own last word (masked top bit),
-            # plain bit-63 carry elsewhere; words past a pair's last are
-            # processed but never read back (upward-only propagation)
-            if uniform_last:
-                if w == W - 1:
-                    hp_c_new = ((hp & last[a]) != 0).astype(np.uint64)
-                    hn_c_new = ((hn & last[a]) != 0).astype(np.uint64)
-                    dist[a] += hp_c_new.astype(np.int64)
-                    dist[a] -= hn_c_new.astype(np.int64)
-                else:
-                    hp_c_new = hp >> np.uint64(63)
-                    hn_c_new = hn >> np.uint64(63)
-            else:
-                is_last = last_w[a] == w
-                if is_last.any():
-                    hp_c_new = np.where(
-                        is_last, (hp & last[a]) != 0, hp >> np.uint64(63)
-                    ).astype(np.uint64)
-                    hn_c_new = np.where(
-                        is_last, (hn & last[a]) != 0, hn >> np.uint64(63)
-                    ).astype(np.uint64)
-                    dist[a] += np.where(is_last, hp_c_new.astype(np.int64), 0)
-                    dist[a] -= np.where(is_last, hn_c_new.astype(np.int64), 0)
-                else:
-                    hp_c_new = hp >> np.uint64(63)
-                    hn_c_new = hn >> np.uint64(63)
-            hp = (hp << one) | hp_c
-            hn = (hn << one) | hn_c
-            vp[a, w] = hn | ~(d0 | hp)
-            vn[a, w] = hp & d0
-            hp_c, hn_c = hp_c_new, hn_c_new
-    return dist[inv]
+        aw = active * W
+        vp_a = vp[:active]
+        vn_a = vn[:active]
+        hp_in = hp_c[:aw].reshape(active, W)
+        hn_in = hn_c[:aw].reshape(active, W)
+        x = inp.pm.take(inp.base[:active] + inp.text[:active, s + W : s : -1])
+        x |= hn_in
+        d0 = x & vp_a
+        d0 += vp_a
+        d0 ^= vp_a
+        d0 |= x
+        d0 |= vn_a
+        hp = vn_a | ~(d0 | vp_a)
+        hn = d0 & vp_a
+        sb = score_bit[:active]
+        dist[:active] += ((hp[:, -1] >> sb) & one).astype(np.int64)
+        dist[:active] -= ((hn[:, -1] >> sb) & one).astype(np.int64)
+        np.right_shift(hp, s63, out=hp_next[1 : aw + 1].reshape(active, W))
+        np.right_shift(hn, s63, out=hn_next[1 : aw + 1].reshape(active, W))
+        hp_next[:aw:W] = one
+        hn_next[:aw:W] = 0
+        hp <<= one
+        hp |= hp_in
+        hn <<= one
+        hn |= hn_in
+        np.bitwise_or(hn, ~(d0 | hp), out=vp_a)
+        np.bitwise_and(hp, d0, out=vn_a)
+        hp_c, hp_next = hp_next, hp_c
+        hn_c, hn_next = hn_next, hn_c
+    return dist[inp.inv]
 
 
 _BAND_SENTINEL = np.int64(1) << 40  # "> any cutoff" result marker
@@ -462,46 +539,40 @@ def myers_batch_block_banded(
     return dist[inv]
 
 
+@_text_budgeted
 def lcs_batch_block(pats: list, texts: list, W: int) -> np.ndarray:
     """Vectorized-across-pairs blockwise Hyyrö LCS for patterns of word
     count W (reference lcs_blockwise semantics, lcs_seq.rs:267-341, no
     band): S-vector per word with an emulated add-with-carry chain;
-    LCS = popcount of ~S."""
+    LCS = popcount of ~S. Words run on anti-diagonals as in
+    myers_batch_block; a word reading pad code 0 with a zero carry in
+    keeps its state and carries out zero, so steps outside a pair's text
+    are no-ops."""
+    inp = _step_inputs(pats, texts, W)
     n = len(pats)
-    pcodes, plens, poffs = _encode_codes(pats)
-    tcodes, tlens, toffs = _encode_codes(texts)
-    pcodes, tcodes, sigma = _compact_alphabet(pcodes, tcodes)
-    order = np.argsort(-tlens, kind="stable")
-    inv = np.empty(n, dtype=np.intp)
-    inv[order] = np.arange(n, dtype=np.intp)
-    pm = _build_pm_block(pats, pcodes, plens, poffs, W, sigma)[order]
-    plens_s = plens[order]
-    tlens_s = tlens[order]
-    toffs_s = toffs[:-1][order]
     s = np.full((n, W), ~np.uint64(0), dtype=np.uint64)
-    max_t = int(tlens_s[0]) if n else 0
+    # flat carry buffers as in myers_batch_block; word 0's slots stay
+    # zero (no carry into the lowest word)
+    carry = np.zeros(n * W + 1, dtype=bool)
+    carry_next = carry.copy()
+    tl = inp.tlens
     active = n
-    rows = np.arange(n, dtype=np.intp)
-    for j in range(max_t):
-        while active > 0 and tlens_s[active - 1] <= j:
+    for step in range(int(tl[0]) + W - 1 if n else 0):
+        while active > 0 and tl[active - 1] <= step - W + 1:
             active -= 1
-        a = slice(0, active)
-        cj = tcodes[toffs_s[a] + j]
-        carry = np.zeros(active, dtype=np.uint64)
-        for w in range(W):
-            s_w = s[a, w]
-            u = s_w & pm[rows[:active], w, cj]
-            t1 = s_w + u
-            c1 = t1 < s_w
-            x = t1 + carry
-            c2 = x < t1
-            carry = (c1 | c2).astype(np.uint64)
-            s[a, w] = x | (s_w - u)
-    nots = ~s
-    sim = np.zeros(n, dtype=np.int64)
-    for w in range(W):
-        sim += _popcount_u64(nots[:, w]).astype(np.int64)
-    return sim[inv]
+        aw = active * W
+        s_a = s[:active]
+        u = inp.pm.take(inp.base[:active] + inp.text[:active, step + W : step : -1])
+        u &= s_a
+        t1 = s_a + u
+        x = t1 + carry[:aw].reshape(active, W)
+        np.logical_or(t1 < s_a, x < t1, out=carry_next[1 : aw + 1].reshape(active, W))
+        carry_next[:aw:W] = False
+        s_a -= u
+        s_a |= x
+        carry, carry_next = carry_next, carry
+    sim = _popcount_u64((~s).ravel()).reshape(n, W).sum(axis=1).astype(np.int64)
+    return sim[inp.inv]
 
 
 def osa_batch_block(pats: list, texts: list, W: int) -> np.ndarray:
@@ -574,95 +645,96 @@ def osa_batch_block(pats: list, texts: list, W: int) -> np.ndarray:
     return dist[inv]
 
 
+# _LOW[b]: the b low bits set, b in [0, 64]
+_LOW = np.array([(1 << b) - 1 for b in range(65)], dtype=np.uint64)
+
+
+@_text_budgeted
 def jaro_batch_block(pats: list, texts: list, W: int, k=None) -> np.ndarray:
     """Vectorized-across-pairs Jaro similarity (pattern <= 64*W chars,
     any codepoints). Two phases mirroring the reference's bit-parallel flagging
     (/root/reference/src/distance/jaro.rs:147-190,286-420):
 
-    1. per text char, build the per-pair match window [j-bound, j+bound]
-       over the pattern's words, flag the lowest unflagged PM bit, and
-       append the text char to the pair's match sequence;
+    1. per text char, flag the lowest unflagged PM bit inside the
+       match window [j-bound, j+bound], searching the pattern's words low
+       to high, and record whether the char matched;
     2. walk flagged pattern bits in order against the matched text chars
        to count transpositions.
 
+    Phase 1 runs words on anti-diagonals as in myers_batch_block: at
+    step s word w takes char s - w, and the carry from word w-1 says
+    whether a lower word already matched that char. Pad code 0 (no PM
+    bits) makes steps outside a pair's text no-ops. The last word lags
+    W - 1 chars behind word 0, so after step s the chars up to s - W + 1
+    are resolved.
+
     ``k``: optional similarity cutoff (scalar float, shared across the
     chunk) — the reference's in-kernel phase-2 early exit
-    (jaro.rs:300-320 common-character bound): every 32 text chars, pairs
-    whose best still-achievable similarity (m_max = matches so far + the
-    smaller of remaining text chars / unmatched pattern chars; third
-    Jaro term bounded by 1) falls below ``k`` are dropped from the scan
-    and return the -1.0 sentinel (callers only compare against the
-    cutoff). The batch compacts when enough pairs die, so survivors
-    keep full vector width.
+    (jaro.rs:300-320 common-character bound): every 32 resolved text
+    chars, pairs whose best still-achievable similarity (m_max = matches
+    so far + the smaller of unresolved text chars / unmatched pattern
+    chars; third Jaro term bounded by 1) falls below ``k`` are dropped
+    from the scan and return the -1.0 sentinel (callers only compare
+    against the cutoff). The batch compacts when enough pairs die, so
+    survivors keep full vector width.
     """
+    inp = _step_inputs(pats, texts, W)
     n = len(pats)
-    pcodes, plens, poffs = _encode_codes(pats)
-    tcodes, tlens, toffs = _encode_codes(texts)
-    pcodes, tcodes, sigma = _compact_alphabet(pcodes, tcodes)
-    order = np.argsort(-tlens, kind="stable")
-    pm = _build_pm_block(pats, pcodes, plens, poffs, W, sigma)[order]
-    plens_s = plens[order].astype(np.int64)
-    tlens_s = tlens[order].astype(np.int64)
-    toffs_s = toffs[:-1][order]
-    poffs_s = poffs[:-1][order]
-    orig = order.copy()  # current row -> original batch row
+    orig = inp.order.copy()  # current row -> original batch row
+    base, text = inp.base, inp.text
+    plens_s = inp.plens.astype(np.int64)
+    tlens_s = inp.tlens.astype(np.int64)
+    poffs_s = inp.poffs
     bound = np.maximum(np.maximum(plens_s, tlens_s) // 2 - 1, 0)
+    steps = int(tlens_s[0]) + W - 1 if n else 0
+    # at step s word w's window covers its local bits [s + lo_off,
+    # s + hi_off) (char j = s - w, window [j - bound, j + bound], word
+    # offset 64w); low_bits[x - lo_min] is _LOW at x clipped to [0, 64],
+    # so each bound's mask is one take
+    w65 = 65 * np.arange(W, dtype=np.int64)
+    lo_off = -bound[:, None] - w65
+    hi_off = bound[:, None] + 1 - w65
+    lo_min = int(lo_off.min()) if n else 0
+    hi_max = int(hi_off.max()) + steps if n else 0
+    low_bits = _LOW[np.clip(np.arange(lo_min, hi_max + 1), 0, 64)]
+    high_bits = ~low_bits
+    lo_off -= lo_min
+    hi_off -= lo_min
     one = np.uint64(1)
-    flagged = np.zeros((n, W), dtype=np.uint64)
+    unflagged = np.full((n, W), ~np.uint64(0), dtype=np.uint64)
+    # carry into word w is column w: did a lower word match the char?
+    taken = np.zeros((n, W + 1), dtype=bool)
+    taken_next = taken.copy()
+    # hits[:, s]: did the char the last word resolved at step s match
+    hits = np.zeros((n, steps), dtype=bool)
     max_m = int(plens_s.max()) if n else 0
-    matched2 = np.zeros((n, max(max_m, 1)), dtype=np.intp)
-    cnt = np.zeros(n, dtype=np.int64)
-    max_t = int(tlens_s[0]) if n else 0
     active = n
-    rows = np.arange(n, dtype=np.intp)
-    # sliding window maintained incrementally: at char j the window is
-    # pattern bits [j-bound, j+bound] — each step sets one new high-edge
-    # bit and clears one low-edge bit (two scatters instead of a full
-    # per-word mask rebuild)
-    window = np.zeros((n, W), dtype=np.uint64)
-    hi_ptr = np.zeros(n, dtype=np.int64)  # next bit to set (exclusive hi)
-    for j in range(max_t):
-        while active > 0 and tlens_s[active - 1] <= j:
+    for s in range(steps):
+        while active > 0 and tlens_s[active - 1] <= s - W + 1:
             active -= 1
-        if active == 0 and k is not None:
+        if active == 0:
             break
-        a = slice(0, active)
-        r = rows[:active]
-        cj = tcodes[toffs_s[a] + j]
-        hi_target = np.minimum(j + bound[a] + 1, plens_s[a])
-        while True:
-            grow = np.nonzero(hi_ptr[:active] < hi_target)[0]
-            if len(grow) == 0:
-                break
-            p = hi_ptr[grow]
-            window[grow, (p >> 6)] |= one << (p & 63).astype(np.uint64)
-            hi_ptr[grow] += 1
-        lo_clear = j - bound[a] - 1
-        shrink = np.nonzero((lo_clear >= 0) & (lo_clear < plens_s[a]))[0]
-        if len(shrink):
-            p = lo_clear[shrink]
-            window[shrink, (p >> 6)] &= ~(one << (p & 63).astype(np.uint64))
-        taken = np.zeros(active, dtype=bool)
-        for w in range(W):
-            cand = pm[r, w, cj] & window[a, w] & ~flagged[a, w]
-            take = (cand != 0) & ~taken
-            if take.any():
-                low = cand & (~cand + one)
-                tr = r[take]
-                flagged[tr, w] |= low[take]
-                taken |= take
-        hit = np.nonzero(taken)[0]
-        if len(hit):
-            matched2[hit, cnt[hit]] = cj[hit]
-            cnt[hit] += 1
-        if k is not None and active > 0 and (j & 31) == 31:
-            # best-achievable bound: each remaining text char adds at most
-            # one match, total matches <= pattern length, third term <= 1
+        cand = inp.pm.take(base[:active] + text[:active, s + W : s : -1])
+        cand &= low_bits.take(hi_off[:active] + s)
+        cand &= high_bits.take(lo_off[:active] + s)
+        cand &= unflagged[:active]
+        t_in = taken[:active, :W]
+        low = cand & (~cand + one)
+        low[t_in] = 0
+        unflagged[:active] ^= low
+        np.logical_or(t_in, cand != 0, out=taken_next[:active, 1:])
+        hits[:active, s] = taken_next[:active, W]
+        taken, taken_next = taken_next, taken
+        j = s - W + 1  # last resolved char
+        if k is not None and j >= 0 and (j & 31) == 31:
+            # best-achievable bound: each unresolved text char adds at
+            # most one match, total matches <= pattern length, third
+            # term <= 1
+            a = slice(0, active)
+            cnt = np.count_nonzero(hits[a, : s + 1], axis=1)
             rem = tlens_s[a] - (j + 1)
-            m_max = cnt[a] + np.minimum(plens_s[a] - cnt[a], rem)
-            ub = (
-                m_max / plens_s[a] + m_max / tlens_s[a] + 1.0
-            ) / 3.0
+            m_max = cnt + np.minimum(plens_s[a] - cnt, rem)
+            ub = (m_max / plens_s[a] + m_max / tlens_s[a] + 1.0) / 3.0
             dead = ub < k - 1e-9
             ndead = int(dead.sum())
             # compact only when enough died to repay the gather cost
@@ -670,36 +742,33 @@ def jaro_batch_block(pats: list, texts: list, W: int, k=None) -> np.ndarray:
                 keep = np.ones(len(orig), dtype=bool)
                 keep[:active][dead] = False
                 orig = orig[keep]
-                pm = pm[keep]
-                flagged = flagged[keep]
-                window = window[keep]
-                hi_ptr = hi_ptr[keep]
-                cnt = cnt[keep]
-                bound = bound[keep]
+                base = base[keep]
+                text = text[keep]
+                hits = hits[keep]
+                unflagged = unflagged[keep]
+                taken = taken[keep]
+                taken_next = taken_next[keep]
+                lo_off = lo_off[keep]
+                hi_off = hi_off[keep]
                 plens_s = plens_s[keep]
                 tlens_s = tlens_s[keep]
-                toffs_s = toffs_s[keep]
                 poffs_s = poffs_s[keep]
-                matched2 = matched2[keep]
-                rows = np.arange(len(orig), dtype=np.intp)
                 active -= ndead
-    # phase 2: transpositions, fully vectorized — unpack flagged bits to a
-    # boolean matrix; np.nonzero yields (pair, pos) in row-major order =
-    # flag order per pair; compare against the matched text chars in order
+    # phase 2: transpositions, fully vectorized — np.nonzero yields the
+    # flagged pattern bits and the matched text chars in row-major order,
+    # i.e. in order per pair, and each match flagged exactly one bit
     cur_n = len(orig)
+    cnt = np.count_nonzero(hits, axis=1)
     t_cnt = np.zeros(cur_n, dtype=np.int64)
     if max_m and cur_n:
         bits = np.unpackbits(
-            flagged.view(np.uint8), axis=1, bitorder="little"
-        )[:, : max(max_m, 1)]
+            (~unflagged).view(np.uint8), axis=1, bitorder="little"
+        )[:, :max_m]
         ri, ci = np.nonzero(bits)
-        if len(ri):
-            starts = np.zeros(cur_n + 1, dtype=np.int64)
-            np.cumsum(np.bincount(ri, minlength=cur_n), out=starts[1:])
-            seq = np.arange(len(ri)) - starts[ri]
-            ch1 = pcodes[poffs_s[ri] + ci]
-            ch2 = matched2[ri, seq]
-            np.add.at(t_cnt, ri, (ch1 != ch2).astype(np.int64))
+        hr, hc = np.nonzero(hits)
+        ch1 = inp.pcodes[poffs_s[ri] + ci]
+        ch2 = text[hr, hc + 1]  # step hc resolved char hc - W + 1
+        t_cnt = np.bincount(ri[ch1 != ch2], minlength=cur_n)
     m = cnt.astype(np.float64)
     with np.errstate(divide="ignore", invalid="ignore"):
         sim = np.where(
@@ -822,10 +891,13 @@ _DL_CUBE_BUDGET = 24 * 1024 * 1024  # bytes; int16 cube sized to stay near L3
 # W=250. Cap sits at the top of the measured parity zone.
 _BLOCK_MAX_WORDS = 24
 # Chunk width of the blockwise kernels: bounds the (chunk, W, sigma) u64 PM
-# gather table AND sets the numpy vector width of every per-char step.
-# Swept on ~300-char doc pairs: 512 -> 2048 is +32% under 32 concurrent
-# worker processes (111.7k vs 84.6k pairs/s machine-wide jaro-winkler);
-# 8192 wins single-thread but loses under contention (cache working set).
+# gather table AND sets the numpy vector width of every step (chunk x W
+# lanes in the step-scheduled kernels, chunk lanes per word in the banded
+# and OSA kernels). Swept on ~300-char doc pairs with per-char word loops:
+# 512 -> 2048 is +32% under 32 concurrent worker processes (111.7k vs
+# 84.6k pairs/s machine-wide jaro-winkler); 8192 wins single-thread but
+# loses under contention (cache working set). Not re-swept for the step
+# schedule: score_long's word-count groups are below one chunk.
 _BLOCK_CHUNK = 2048
 # Above W=16 the PM gather table + per-char working set outgrow the
 # cache at full chunk width: 1024 measured >= 2048 at W=20 (1.01 vs

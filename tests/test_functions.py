@@ -4,6 +4,7 @@ of pairs, including nulls and cutoff filtering."""
 
 from __future__ import annotations
 
+import inspect
 import random
 
 import pytest
@@ -382,3 +383,53 @@ def test_partial_ratio_hand_and_randomized(spark):
     assert out[1] == 1.0
     for rid, t1, t2 in rows:
         assert out[rid] == round(_pr_reference(t1, t2), 6), (rid, t1, t2)
+
+
+def _two_column_scorers() -> list[str]:
+    """Every public Column scorer taking (s1, s2): the generated string
+    and ``_seq`` metric surfaces, jaro / jaro-winkler, ratio and
+    token_set_ratio."""
+    return sorted(
+        name
+        for name, fn in vars(RF).items()
+        if not name.startswith("_")
+        and inspect.isfunction(fn)
+        and fn.__module__ == RF.__name__
+        and list(inspect.signature(fn).parameters)[:2] == ["s1", "s2"]
+    )
+
+
+def _keep_all_cutoff(name: str) -> float:
+    """A score_cutoff every non-NULL pair meets, so only NULL inputs may
+    come out NULL."""
+    if "normalized_distance" in name:
+        return 1.0
+    if "distance" in name:
+        return 100
+    return 0
+
+
+@pytest.mark.parametrize("name", _two_column_scorers())
+def test_scorer_null_contract(spark, name):
+    """NULL on either side scores NULL, with and without score_cutoff, and
+    no row is dropped; the non-NULL pair keeps its score."""
+    fn = getattr(RF, name)
+    if name.endswith("_seq"):
+        schema = "id int, s1 array<int>, s2 array<int>"
+        val, other = [1, 2, 3], [1, 2, 4]
+    else:
+        schema = "id int, s1 string, s2 string"
+        val, other = "abc", "abd"
+    df = spark.createDataFrame(
+        [(0, val, other), (1, None, other), (2, val, None), (3, None, None)],
+        schema,
+    )
+    cols = [fn("s1", "s2").alias("plain")]
+    if "score_cutoff" in inspect.signature(fn).parameters:
+        cols.append(fn("s1", "s2", score_cutoff=_keep_all_cutoff(name)).alias("cut"))
+    rows = {r.id: r for r in df.select("id", *cols).collect()}
+    assert sorted(rows) == [0, 1, 2, 3]
+    for r in rows.values():
+        for c in r.asDict():
+            if c != "id":
+                assert (r[c] is None) == (r.id != 0), (c, r)

@@ -796,6 +796,98 @@ class TestBlockwiseBatchKernels:
         assert (banded[~under] > kv[~under]).all()
 
 
+def _step_kernel_pairs(W: int, n: int, alphabet: str, seed: int):
+    """``n`` (pattern, text) pairs with patterns of exactly W words and
+    ragged texts in one chunk: each text is plen to plen + 300 chars, an
+    edited copy of the pattern plus random tail chars."""
+    import random
+
+    rnd = random.Random(seed)
+    pats, texts = [], []
+    for _ in range(n):
+        lp = rnd.randint(64 * (W - 1) + 1, 64 * W)
+        p = [rnd.choice(alphabet) for _ in range(lp)]
+        t = p + [rnd.choice(alphabet) for _ in range(rnd.randint(0, 300))]
+        for _ in range(rnd.randint(0, len(t) // 4)):
+            t[rnd.randrange(len(t))] = rnd.choice(alphabet)
+        pats.append("".join(p))
+        texts.append("".join(t))
+    return pats, texts
+
+
+STEP_ALPHABETS = {"latin1": "abcdefgh ", "unicode": "абвгд日本語🙂ab "}
+
+
+class TestStepScheduledBlockKernels:
+    """myers_batch_block, lcs_batch_block and jaro_batch_block against the
+    scalar kernels (themselves locked to the reference's oracle vectors
+    above), across word counts, ragged texts, alphabets and chunk sizes."""
+
+    @staticmethod
+    def _check(W: int, pats: list, texts: list) -> None:
+        import numpy as np
+
+        from rapidfuzz_spark.kernels import batch as B
+        from rapidfuzz_spark.kernels.common import pm_vector
+        from rapidfuzz_spark.kernels.jaro import jaro_similarity
+        from rapidfuzz_spark.kernels.lcs_indel import lcs_length
+        from rapidfuzz_spark.kernels.levenshtein import myers_distance
+
+        pms = [pm_vector(p) for p in pats]
+        if W > 1:
+            lev = B.myers_batch_block(pats, texts, W)
+            lcs = B.lcs_batch_block(pats, texts, W)
+            for i, (p, t) in enumerate(zip(pats, texts)):
+                assert lev[i] == myers_distance(p, t, pms[i])
+                assert lcs[i] == lcs_length(p, t, pms[i])
+        exact = np.array(
+            [jaro_similarity(p, t, pm) for p, t, pm in zip(pats, texts, pms)]
+        )
+        for k in (None, 0.5, 0.85, 0.95):
+            got = B.jaro_batch_block(pats, texts, W, k=k)
+            close = np.isclose(got, exact, rtol=0, atol=1e-12)
+            if k is None:
+                assert close.all()
+            else:
+                # at/above the cutoff: exact; below: exact or the sentinel
+                assert close[exact >= k].all()
+                assert (close | (got == -1.0)).all()
+
+    @pytest.mark.parametrize("alphabet", sorted(STEP_ALPHABETS))
+    @pytest.mark.parametrize("W", [1, 2, 3, 5, 9, 16, 17, 24])
+    def test_match_scalar(self, W, alphabet):
+        pats, texts = _step_kernel_pairs(W, 40, STEP_ALPHABETS[alphabet], W)
+        self._check(W, pats, texts)
+
+    @pytest.mark.parametrize("n", ["one", "chunk"])
+    def test_chunk_sizes(self, n):
+        from rapidfuzz_spark.kernels import batch as B
+
+        count = 1 if n == "one" else B._BLOCK_CHUNK
+        pats, texts = _step_kernel_pairs(2, count, STEP_ALPHABETS["latin1"], 1)
+        self._check(2, pats, texts)
+
+    def test_text_budget_split_keeps_results(self, monkeypatch):
+        """A chunk whose padded text matrix exceeds _STEP_TEXT_CELLS runs
+        in row slices with the same results."""
+        import numpy as np
+
+        from rapidfuzz_spark.kernels import batch as B
+
+        pats, texts = _step_kernel_pairs(3, 50, STEP_ALPHABETS["latin1"], 5)
+        kernels = (B.myers_batch_block, B.lcs_batch_block, B.jaro_batch_block)
+        whole = [kernel(pats, texts, 3) for kernel in kernels]
+        monkeypatch.setattr(B, "_STEP_TEXT_CELLS", 2000)
+        for kernel, ref in zip(kernels, whole):
+            assert np.array_equal(kernel(pats, texts, 3), ref)
+
+    def test_myers_rejects_mixed_word_counts(self):
+        from rapidfuzz_spark.kernels import batch as B
+
+        with pytest.raises(ValueError):
+            B.myers_batch_block(["a" * 100, "b" * 10], ["a" * 120, "b" * 130], 2)
+
+
 class TestMbleven:
     """Small-cutoff enumeration fast path (reference mbleven2018,
     levenshtein.rs:311-427; routed for cutoff < 4 at :1142-1147)."""

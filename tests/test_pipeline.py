@@ -596,6 +596,24 @@ def test_connected_components_basic(spark):
     assert comp["x"] == comp["y"] == "x"
     assert comp["q"] == comp["q2"] == comp["q3"] == "q"
 
+
+def test_connected_components_raises_when_rounds_run_out(spark):
+    """A permuted 1,000-node path needs more than 2 star rounds: running
+    out of rounds raises instead of returning ids from a non-star edge
+    set; the default round budget converges to one entity."""
+    import random
+
+    ids = list(range(1000))
+    random.Random(4).shuffle(ids)
+    edges = spark.createDataFrame(
+        list(zip(ids, ids[1:])), "doc_id_1 int, doc_id_2 int"
+    )
+    with pytest.raises(RuntimeError, match="2 rounds"):
+        cluster.connected_components(edges, max_iter=2)
+    comp = cluster.connected_components(edges).collect()
+    assert len(comp) == 1000
+    assert {r.entity_id for r in comp} == {0}
+
 def test_hybrid_soft_tfidf_jw_f1(spark, corpus, tmp_path):
     """The precision-gated hybrid edge rule (soft_tfidf_jw) must clear the
     north-rule F1 gate on the synthesized corpus (0.9906 measured at 50k
